@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from streamprocessing_with_kafka_spark.functions.lineage import free_local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import dec_sum, round_sql
-from streamprocessing_with_kafka_spark.sources.tables import _parquet_layout, load_table
+from streamprocessing_with_kafka_spark.sources.tables import load_table, table_row_count
 
 
 def cooccurrence_edges(ev: DataFrame) -> DataFrame:
@@ -129,9 +129,7 @@ def triangle_clustering(
     # SMJ a 6 MB table); at lake scale the hint is withheld -- the
     # adjacency table is |V| rows carrying |E| total longs and must be
     # free to plan as SMJ (size-adaptive, same boundary as pagerank).
-    small = (
-        _parquet_layout(f"{sf_dir}/events.parquet")[0] < GRAPH_SMALL_EVENT_ROWS
-    )
+    small = table_row_count(sf_dir, "events") < GRAPH_SMALL_EVENT_ROWS
     p = spark.sparkContext.defaultParallelism
     adj = d.groupBy("s").agg(F.collect_list("t").alias("nbr"))
     adj_t = adj.select(F.col("s").alias("t"), F.col("nbr").alias("nbr_t"))
@@ -237,7 +235,9 @@ PAGERANK_ITERS = 3  # fixed unrolled rounds (the de-recursion pattern)
 PAGERANK_DAMPING = 0.85
 
 # The graph operators' test-scale/lake-scale boundary, measured on the
-# events table's parquet footer (cheap driver-side read, no data action).
+# events table's parquet footer (cheap driver-side read, no data action;
+# a table whose footer cannot be read -- e.g. a directory dataset -- is
+# treated as large, the branch that is safe at any scale).
 # Below this many event rows the vocabulary-sized graph frames are tiny:
 # AQE coalesces every ENSURE_REQUIREMENTS exchange to a handful of
 # partitions (pagerank pins width instead of keeping map-side combine)
@@ -285,9 +285,8 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = spark.sparkContext.defaultParallelism
     # Scale-adaptive strategy for the per-round mass aggregate: see
     # GRAPH_SMALL_EVENT_ROWS.  Cheap driver-side footer read;
-    # no data action.
-    ev_rows, _ = _parquet_layout(f"{sf_dir}/events.parquet")
-    combine = ev_rows >= GRAPH_SMALL_EVENT_ROWS
+    # no data action; an unreadable footer counts as large.
+    combine = table_row_count(sf_dir, "events") >= GRAPH_SMALL_EVENT_ROWS
     for _ in range(PAGERANK_ITERS):
         ranks = _pagerank_round(directed, deg, n_row, ranks, p, combine).localCheckpoint()
         if prev is not None:

@@ -7,13 +7,23 @@ pruning and partition pruning with no engine code. The only special case is
 that physical type, so we read nanos as long (legacy conf) and convert with
 integer arithmetic (`div 1000`, never float division: 2^63-scale nanos lose
 microsecond precision in a double).
+
+Parquet schema inference launches one Spark job per `spark.read.parquet`
+call. A single-file table's schema is therefore inferred once per FILE
+VERSION and pinned on later reads with `.schema(...)`, which launches no
+job. Only metadata is kept: every call still builds a fresh scan that
+reads the bytes.
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
+import os
+import stat
+import sys
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import LongType, StructType
 
 from streamprocessing_with_kafka_spark.session import ensure_runtime_confs
 
@@ -30,17 +40,58 @@ TABLES = [
     "embeddings",
 ]
 
+#: `table_row_count`'s answer when the footer cannot be read: larger than
+#: any scale gate, so an unknown table always takes the lake-scale branch.
+UNKNOWN_ROWS = sys.maxsize
 
-@lru_cache(maxsize=None)
-def _parquet_layout(path: str) -> tuple[int, int]:
-    """(num_rows, num_row_groups) from the footer -- cheap driver-side read."""
+
+@dataclass
+class _Layout:
+    """What one version of a parquet file says about itself."""
+
+    version: tuple[int, int]  # (st_mtime_ns, st_size)
+    rows: int | None  # footer row count; None if the footer is unreadable
+    row_groups: int | None
+    schema: StructType | None = None  # Spark-inferred, filled by load_table
+
+
+_LAYOUTS: dict[str, _Layout] = {}
+
+
+def _layout(path: str) -> _Layout | None:
+    """The cached layout of the file at `path` in its current version, or
+    None when `path` is not a regular local file. A directory dataset gets
+    None because its mtime does not change when a file inside it is
+    rewritten, so no version key is trustworthy for it. A rewrite that
+    keeps the size and lands within the filesystem's timestamp resolution
+    keeps the old version key."""
     try:
-        import pyarrow.parquet as pq
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    version = (st.st_mtime_ns, st.st_size)
+    lay = _LAYOUTS.get(path)
+    if lay is None or lay.version != version:
+        try:
+            import pyarrow.parquet as pq
 
-        m = pq.ParquetFile(path).metadata
-        return m.num_rows, m.num_row_groups
-    except Exception:
-        return 0, 1 << 30
+            m = pq.ParquetFile(path).metadata
+            rows, rgs = m.num_rows, m.num_row_groups
+        except Exception:
+            rows = rgs = None
+        lay = _LAYOUTS[path] = _Layout(version, rows, rgs)
+    return lay
+
+
+def table_row_count(sf_dir: str, name: str) -> int:
+    """Row count from the table's parquet footer -- a driver-side read, no
+    Spark job. Returns UNKNOWN_ROWS when the footer cannot be read (a
+    directory dataset, a missing file, a corrupt footer), so a scale gate
+    `rows < SMALL` treats the unknown table as large."""
+    lay = _layout(f"{sf_dir}/{name}.parquet")
+    return UNKNOWN_ROWS if lay is None or lay.rows is None else lay.rows
 
 
 def load_table(
@@ -48,8 +99,14 @@ def load_table(
 ) -> DataFrame:
     ensure_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    lay = _layout(path)
+    schema = lay.schema if lay is not None else None
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    if schema is None:
+        schema = df.schema
+        if lay is not None:
+            lay.schema = schema
+    if name == "events" and "ts" in schema.names and schema["ts"].dataType == LongType():
         # nanos -> microsecond timestamp; integer division keeps precision.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Row groups are parquet's split granularity: a large single-row-group
@@ -78,10 +135,11 @@ def load_table(
     # sums, regex) keep the default.
     if rebalance is False:
         return df
-    rows, rgs = _parquet_layout(path)
+    if lay is None or lay.rows is None:
+        return df  # layout unknown: assume a lake input with ample splits
     cores = spark.sparkContext.defaultParallelism
     threshold = 4096 if name in ("documents", "embeddings") else 200_000
-    if (rebalance or rows >= threshold) and rgs < cores:
+    if (rebalance or lay.rows >= threshold) and lay.row_groups < cores:
         df = df.repartition(cores)
     return df
 

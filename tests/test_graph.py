@@ -1,11 +1,14 @@
 """Semantic invariants for the histogram and graph operators that the
 oracle hash-match cannot express: histogram completeness/partition of
-the corpus, and triangle/clustering arithmetic on a planted graph."""
+the corpus, triangle/clustering arithmetic on a planted graph, and the
+graph operators' scale gate on both of its sides."""
 
 import math
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from streamprocessing_with_kafka_spark.operators import graph
 from streamprocessing_with_kafka_spark.operators.graph import pagerank, triangle_clustering
 from streamprocessing_with_kafka_spark.operators.windows import (
     HIST_BINS,
@@ -148,3 +151,59 @@ def test_equidepth_bins_are_balanced(spark, sf_dir):
     for t, bins in by_type.items():
         assert set(bins) == set(range(HIST_BINS)), (t, bins)
         assert max(bins.values()) - min(bins.values()) <= 2, (t, bins)
+
+
+def test_graph_scale_gate_treats_unknown_row_count_as_large(spark, tmp_path, monkeypatch):
+    """Both graph operators pick their branch from the events footer's row
+    count. A readable small file takes the test-scale branch (broadcast
+    adjacency, pinned-width pagerank); a footer that cannot be read -- a
+    directory dataset, or a failing read injected on a regular file --
+    must take the lake-scale branch, and both branches compute the same."""
+    combines = []
+    real_round = graph._pagerank_round
+    monkeypatch.setattr(
+        graph, "_pagerank_round", lambda *a: combines.append(a[-1]) or real_round(*a)
+    )
+
+    def branches(sf):
+        """(broadcast hinted in triangles, map-side combine in pagerank,
+        triangle rows, pagerank rows) on the events table under `sf`."""
+        combines.clear()
+        tri = triangle_clustering(spark, sf)
+        hinted = "strategy=broadcast" in tri._jdf.queryExecution().optimizedPlan().toString()
+        ranks = pagerank(spark, sf)
+        assert len(set(combines)) == 1, combines
+        return hinted, combines[0], sorted(tri.collect()), sorted(ranks.collect())
+
+    ev = _planted_events(
+        spark,
+        [("click", 0, [1, 2]), ("view", 0, [2, 3]), ("click", 1, [1, 3]),
+         ("view", 1, [1, 4]), ("view", 2, [3, 4])],
+    )
+    as_dir = str(tmp_path / "dir")
+    ev.write.parquet(as_dir + "/events.parquet")
+
+    def as_file(name):
+        sf = tmp_path / name
+        ev.coalesce(1).write.parquet(str(sf / "parts"))
+        next((sf / "parts").glob("part-*.parquet")).rename(sf / "events.parquet")
+        return str(sf)
+
+    small = branches(as_file("file"))
+    assert small[:2] == (True, False)
+
+    large_dir = branches(as_dir)
+    assert large_dir[:2] == (False, True)
+
+    broken = as_file("broken")
+
+    def unreadable(*a, **k):
+        raise OSError("injected footer read failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "ParquetFile", unreadable)
+        large_file = branches(broken)
+    assert large_file[:2] == (False, True)
+
+    assert small[2:] == large_dir[2:] == large_file[2:]
+    assert {r.user_id: r.n_triangles for r in small[2]} == {1: 2, 2: 1, 3: 2, 4: 1}
