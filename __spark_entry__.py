@@ -11,6 +11,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streamprocessing_with_kafka_spark.functions.lineage import drain_ephemeral_checkpoints
 from streamprocessing_with_kafka_spark.plans.registry import registry
 from streamprocessing_with_kafka_spark.session import ensure_runtime_confs
 
@@ -24,9 +25,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query. The driver runs them one at a time, so
+    building a query means the previous query's DataFrame has been
+    materialized or discarded: each call first frees the one-shot
+    checkpoints the previous query registered, which nothing else frees
+    in the driver's session (functions/lineage.py)."""
+
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
             ensure_runtime_confs(spark)
+            drain_ephemeral_checkpoints()
             return fn(spark, sf_dir)
 
         return run

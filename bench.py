@@ -48,10 +48,16 @@ def main() -> None:
 
     bench_queries = {n: q for n, q in registry().items() if q.bench}
 
-    # warmup: JIT every bench plan shape once at the smallest scale factor
-    # (whole-stage codegen compiles per plan shape; first run of a novel
-    # plan costs seconds regardless of data volume), then touch every
-    # table's footers at the bench SF so timings measure the query.
+    # warmup: compile every bench plan's generated classes once at the
+    # smallest scale factor (Janino compiles each distinct generated
+    # source; a novel plan's first run costs seconds regardless of data
+    # volume). The classes stay compiled for the timed runs below only
+    # because get_spark sizes the codegen class cache to the registry:
+    # at Spark's default of 100 entries the 17 queries' ~224 classes
+    # evicted each other, every lap recompiled ~214 of them, and each
+    # query's first timed run paid its share (the min of 3 hid it). Then
+    # touch every table's footers at the bench SF so timings measure the
+    # query.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
         for q in bench_queries.values():
@@ -80,9 +86,12 @@ def main() -> None:
     # absorb a multi-second host-scheduling stall; the min is the faithful
     # measure of the plan itself (r2's n=2 left two sub-second deltas
     # ambiguous between noise and regression -- VERDICT r2 item 4).
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     timings: dict[str, float] = {}
+    codegen_compiles: dict[str, int] = {}
     for name, q in sorted(bench_queries.items()):
         best = float("inf")
+        c0 = compiles().getCount()
         for _ in range(3):
             t0 = time.time()
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -92,6 +101,7 @@ def main() -> None:
             # recomputed from parquet; this only frees dead storage.
             drain_ephemeral_checkpoints()
         timings[name] = round(best, 3)
+        codegen_compiles[name] = compiles().getCount() - c0
 
     total = round(sum(timings.values()), 3)
     print(
@@ -101,6 +111,10 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                # classes Janino compiled over each query's 3 timed runs
+                # (a cache miss each); nonzero means a plan shape whose
+                # generated source differs from run to run.
+                "codegen_compiles": codegen_compiles,
                 "sf": float(sf),
                 # ambient host load (1/5/15-min) at launch and at finish:
                 # this machine is shared, and every cross-round comparison

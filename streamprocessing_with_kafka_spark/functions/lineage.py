@@ -52,7 +52,9 @@ def drain_ephemeral_checkpoints() -> int:
     previous query has been materialized or discarded -- unpersisting a
     local (non-reliable) checkpoint that a still-pending plan references
     would make that plan uncomputable. Harnesses (bench.py, the census,
-    the driver simulation) call this after each query's action."""
+    the driver simulation) call this after each query's action, and
+    `__spark_entry__.queries()` calls it before building each query, so
+    the external driver frees the previous query's checkpoints too."""
     n = 0
     while _EPHEMERAL:
         free_local_checkpoint(_EPHEMERAL.pop())

@@ -46,6 +46,16 @@ _RUNTIME_CONFS = {
     # wrote would scan all row groups. Micros timestamps carry stats (and
     # are what modern readers expect).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Name every whole-stage class GeneratedIterator instead of suffixing
+    # its codegen stage id. AQE numbers stages in the order they are
+    # created, which follows run-time completion order, so the same plan
+    # came out as ...Stage4 on one call and ...Stage6 on the next: a
+    # different source, hence a fresh Janino compile of identical code.
+    # With the id out of the name a warm lap of all registered queries
+    # at sf0.001 compiles 11-13 classes instead of 78-81, and one cold
+    # lap compiles 2,317 instead of 2,652 (4 cores). The id stays in the
+    # plan string (`*(4)`) and in a comment of the generated source.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 
@@ -72,6 +82,22 @@ def get_spark(app_name: str = "streamprocessing-spark-engine") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Compiled-class cache (Janino output, keyed by the full generated
+        # source, so it holds code and never data). Spark's default of 100
+        # entries is smaller than the 17 bench queries' ~224 classes, so
+        # each query evicted the classes the next one needed and a warm
+        # lap recompiled ~214 of them, then ran them cold in the JVM
+        # interpreter. Sized to the whole registry: one lap of all 208
+        # queries into an empty cache compiles 2,317 distinct classes at
+        # sf0.001 and 2,321 at sf0.01 (2,653/2,659 before stage ids left
+        # the class names, see _RUNTIME_CONFS); 4096 leaves ~1.75x
+        # headroom. Memory after three full laps at sf0.01 (4 cores),
+        # against the default: Metaspace +19 MB, code heap +26 MB, JVM
+        # VmHWM +4%.
+        # Static conf, so it must go on the builder: a session the engine
+        # did not build (the external driver's own SparkSession) keeps
+        # Spark's default unless its launcher sets this conf.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
