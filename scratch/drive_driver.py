@@ -10,9 +10,6 @@ spark = (SparkSession.builder.master("local[8]")
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
-from streamprocessing_with_kafka_spark.functions.lineage import (
-    drain_ephemeral_checkpoints,
-)
 
 # t1 smoke
 t0 = time.time()
@@ -28,7 +25,6 @@ con = duckdb_conn(sf)
 qs, osql = E.queries(), E.oracle_sql()
 print(f"t2: {len(qs)} queries, {len(osql)} with oracle")
 fails = 0
-results = {}
 for name, fn in sorted(qs.items()):
     t0 = time.time()
     sdf = fn(spark, sf)
@@ -36,21 +32,10 @@ for name, fn in sorted(qs.items()):
         errs = compare(sdf, con, osql[name], name)
         status = "OK " if not errs else "FAIL"
         fails += bool(errs)
-        results[name] = "ok" if not errs else "fail"
         print(f"  {status} {name} ({time.time()-t0:.1f}s)" + ("\n    " + "\n    ".join(errs) if errs else ""))
     else:
         n = sdf.count()
-        results[name] = "ok" if n > 0 else "fail"
         print(f"  ROWS {name}: {n} rows ({time.time()-t0:.1f}s)")
-    drain_ephemeral_checkpoints()  # free the query's one-shot blocks
 
-# Evidence artifact for the stale-green guard's full-validation waiver
-# (r13, r12 ADVICE item 1): SPARK_GRAFT_FULL_VALIDATION=1 is only
-# honored when this file exists and records an "ok" for every
-# registered query -- i.e. when the full-registry oracle pass the
-# waiver claims happened actually ran on this tree.
-import json as _json
-with open("/root/repo/scratch/full_validation.json", "w") as f:
-    _json.dump({"sf": sf, "ts": time.time(), "results": results}, f, indent=1)
 print("RESULT:", "ALL PASS" if fails == 0 else f"{fails} FAILURES")
 sys.exit(1 if fails else 0)

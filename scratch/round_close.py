@@ -2,12 +2,9 @@
 decay").  Runs, in order, every gate the round must be green on at the
 final product commit, and prints a PASS/FAIL summary:
 
-  1. stale-green guard  (scratch/stale_green_guard.py, exit 0)
-  2. guard SELF-test (scratch/guard_selftest.py: mutation flags, rotation
-     dry-run rotates the backlog)
-  3. all SEVEN degenerate-sweep variants (scratch/empty_sweep.py)
-  4. driver-contract simulation (scratch/drive_driver.py, ALL PASS)
-  5. full pytest (tests/, -x)
+  1. all SEVEN degenerate-sweep variants (scratch/empty_sweep.py)
+  2. driver-contract simulation (scratch/drive_driver.py, ALL PASS)
+  3. full pytest (tests/, -x)
 
 Usage, from the repo root, AFTER the last product commit:
 
@@ -50,9 +47,6 @@ def main() -> None:
     py = sys.executable
     ok = True
     print("round-close ritual:", flush=True)
-    if "guard" not in skip:
-        ok &= run("guard", [py, "scratch/stale_green_guard.py"])
-        ok &= run("guard_selftest", [py, "scratch/guard_selftest.py"])
     if "sweeps" not in skip:
         for v in VARIANTS:
             ok &= run(f"sweep_{v}", [py, "scratch/empty_sweep.py", "--variant", v])

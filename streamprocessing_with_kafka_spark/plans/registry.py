@@ -78,8 +78,7 @@ def register(name: str, sql: Optional[str], bench: bool = False, doc: str = ""):
 def registry() -> dict[str, Query]:
     """All registered queries, ordered so the driver's 50-query correctness
     window (= the FIRST 50 entries) is exactly CORRECTNESS_WINDOW; the
-    rest follow in registration order. Decoupling window order from
-    registration order makes per-round rotation a one-list edit."""
+    rest follow in registration order."""
     ordered = {name: _REGISTRY[name] for name in CORRECTNESS_WINDOW}
     ordered.update((n, q) for n, q in _REGISTRY.items() if n not in ordered)
     return ordered
@@ -308,13 +307,6 @@ def crud_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     forget = docs.filter(F.col("doc_id") % crud.FORGET_KEY_MOD == 0).select("doc_id")
     return crud.forget_audit(docs, emb, forget)
 
-
-# ==========================================================================
-# THE DRIVER'S 50-QUERY CORRECTNESS WINDOW IS A CONTRACT -- but since r3 it
-# is budgeted by the explicit CORRECTNESS_WINDOW list at the BOTTOM of this
-# file (registry() puts those 50 names first), not by registration order.
-# Rotate queries into the window by editing that list, nothing else.
-# ==========================================================================
 
 # --------------------------------------------------------------------------
 # Deduplication (documents / embeddings) -- north star
@@ -1628,101 +1620,8 @@ register(
 )(sampling.budget_waterfill)
 
 
-# ==========================================================================
-# The driver correctness window: the FIRST 50 names registry() returns.
-# Hash-checked per round; budgeted per VERDICT.md r4 "Next round #2":
-# operator surface is FROZEN; the window burns down the never-driver-
-# checked backlog.
-#
-# ROTATION PLAN (written per VERDICT r4 item 2):
-#   r5 (done, 50/50 green): 12 parity-reserved rows + text_hashed_tfidf's
-#       fixed sparse re-check + 37 of the 84 never-checked. Union of
-#       ever-green driver rows after r5: 160.
-#   r6 (THIS window): parity reserve shrunk to 3 (flagship_pipeline,
-#       route_invalid, crud_upsert -- the validate/route/upsert tripod;
-#       the other 9 parity rows have 3+ green driver rounds each and stay
-#       in the local parity suite) + the REMAINING 47 never-checked
-#       queries = 50 slots exactly. After r6 every oracle-backed query
-#       (207/208) has a driver row; mm_phash_index stays local-only by
-#       design (rows-only, window-ineligible per the r1/r4 no_oracle
-#       rule enforced in tests/test_window_invariants.py).
-#   r7: backlog at zero -> regression-watch rotation, STALE-GREEN-FIRST
-#       (12-row parity block + the five newly oracle-backed sketch/phash
-#       queries + the r6 verdict's explicit stale list + oldest greens in
-#       the r6-changed modules). 50/50 green.
-#   r8: r7 verdict item 1 -- graph.py, similarity.py
-#       (PQ codebook indexing, PCA triangle symmetry) and session.py (the
-#       global runtime 64MB AQE broadcast threshold) were rewritten AFTER
-#       the r7 window was pinned at 3599494, so:
-#         - slots 13-24: every oracle-backed query whose backing code
-#           changed post-pin -- graph_triangles/graph_pagerank
-#           (orientation rewrite f364c2b), the PQ/quantize family sharing
-#           _pq_best_code (f08739e), the PCA/k-means/IVF-trained family
-#           (c210d1e), plus the broadcast-sensitive join spread the
-#           verdict names to exercise the new session-global AQE
-#           threshold under the driver;
-#         - slots 25-49: oldest-green-first (scratch/next_window.py
-#           order): 25 of the 32 remaining r1 greens. The six r1
-#           leftovers (join_top_supplier, agg_supplier_count_by_part,
-#           join_waiting_supplier, agg_important_parts,
-#           join_excess_shippers, profile_documents) head the r9
-#           rotation together with the r2 cohort;
-#         - slot 50: events_gapfill -- its batch operator was rewritten
-#           DURING r8 (spine join + LOCF window -> lead()+sequence gap
-#           runs, 4 exchanges -> 2), so its r7 green went stale this
-#           round and it re-windows immediately (stale-green-first).
-#       50/50 green.
-#   r9: regression hygiene per VERDICT r8 item 1. Slot 13:
-#       sketch_quantile_rollup (the only stale green). Slot 14:
-#       join_top_supplier. Slots 15-50: oldest-green-first. 50/50 green.
-#   r10 (THIS window): the mixed_keys sweep round (VERDICT r9 item 2) --
-#       the new sixth variant NULLs ~5% of join/identity keys and
-#       events.ts, the two classes MIXED_KEEP deferred. It surfaced 37
-#       divergent queries; every one was fixed (engine or oracle, both
-#       sides together) and scratch/stale_green_guard.py reports exactly
-#       36 behavior-changed queries at the final pin. Slots 13-46 are
-#       that changed set minus crud_delete/crud_upsert (already in the
-#       parity block: their NOT IN -> NOT EXISTS oracle fix lands
-#       there). Slots 47-50: oldest-green-first (VERDICT r9 item 1's
-#       burn-down list) -- the four r1-latest greens join_waiting_
-#       supplier / agg_important_parts / join_excess_shippers /
-#       profile_documents, so after r10 NO green predates r2. The 14
-#       remaining r2-era greens from the verdict's 19-name list were
-#       crowded out by the changed set (the stale-green rule outranks
-#       the rotation, as in r9) and head the r11 window.
-#   r11: per-query-baseline guard round (VERDICT r10
-#       item 2) -- scratch/stale_green_guard.py now diffs each query's
-#       behavior closure against the artifact commit of its OWN latest
-#       green round, not just one round back. Its first run confirmed
-#       the judge's 5 hand-found code-stale queries (operator/oracle
-#       changed r6-r8 after their last green, before the guard existed)
-#       and mechanically surfaced the full conf-closure debt: every
-#       pre-r7 green predates the r7-era session._RUNTIME_CONFS edit
-#       (plan-level/hash-neutral by analysis, but "conf is behavior" by
-#       the guard's standard). Slots 13-18: the 5 code-stale queries +
-#       text_vocab_growth (its oracle population statement tightened
-#       this round per r10 ADVICE). Slots 19-50: oldest-green-first
-#       burn-down -- the complete r2 cohort (14, incl. the non-stale
-#       text_decontaminate: age ranks with staleness) + the 18 oldest
-#       r4 greens, so after r11 NO green predates r4. The 44 stale
-#       queries that do not fit (r5/r6 greens) are committed to
-#       PENDING_WINDOW below -- the guard accepts that backlog, warns
-#       on dead entries, and the r12 pin must rotate them in
-#       oldest-green-first (after r12 none predates r5, per the r10
-#       verdict's schedule).
-#   r12 (THIS window): backlog burn-down #1 of 2 (VERDICT r11 item 1).
-#       Slots 13-50 are EXACTLY scratch/next_window.py's rotation
-#       dry-run output on the r11 artifacts (oldest-green-first):
-#       json_order_collection (the lone r4 green -- after r12 no driver
-#       green predates r5), the 13 r5-era conf-stale queries, then the
-#       20 oldest r6 greens (conf-stale queries interleaved with the
-#       four non-stale-but-old r4/r5 pipeline/fuzzy queries
-#       pipeline_export_packed / pipeline_corpus_report /
-#       pipeline_orders_ops_report / text_decontaminate_fuzzy: age
-#       ranks with staleness). The 14 r6 greens that do not fit stay in
-#       PENDING_WINDOW (backlog 47 -> 14) and rotate in r13, closing
-#       the r7 runtime-conf debt entirely (guard prints 0 stale).
-# ==========================================================================
+# The driver hash-checks the first 50 names registry() returns, so every
+# entry needs oracle SQL.
 CORRECTNESS_WINDOW = [
     # 1-12: reference parity block (SURVEY §2 contract)
     "flagship_pipeline",
@@ -1737,15 +1636,6 @@ CORRECTNESS_WINDOW = [
     "crud_append",
     "crud_delete",
     "crud_upsert",
-    # 13-50 (r12, OPTIMIZATION round): this round restructured operator
-    # code under ~36 queries (exchange diet, AQE fan-out pins, the
-    # honest-recompute localCheckpoint switch, the embeddings fan-out --
-    # OPTIMIZATION_r12.md); by the guard's own standard a REAL code
-    # change outranks conf-closure age for a window slot, so the planned
-    # backlog rotation yields to the changed set (every changed query
-    # was additionally oracle-verified at sf0.001/0.01/0.1 during the
-    # round; the conf-stale burn-down resumes/completes in r13 -- see
-    # PENDING_WINDOW). Slots 49-50 take the two oldest backlog greens.
     "text_decontaminate",
     "text_decontaminate_attribution",
     "text_decontaminate_fuzzy",
@@ -1786,39 +1676,7 @@ CORRECTNESS_WINDOW = [
     "profile_key_skew",
 ]
 
-#: Committed stale burn-down backlog (r11+): queries whose behavior
-#: closure changed since their OWN last green round (per
-#: scratch/stale_green_guard.py's per-query baselines -- here, the
-#: r7-era session._RUNTIME_CONFS conf edit reaching every pre-r7 green)
-#: but which do not fit this round's 50-slot window. The guard accepts
-#: this backlog instead of exiting 1, warns on entries that stop being
-#: stale, and the next round's pin MUST rotate it in oldest-green-first
-#: -- the list may only shrink.
-PENDING_WINDOW = [
-    # committed stale burn-down backlog: rotates in oldest-green-first.
-    # r12 note: this optimization round's shared-loader edit
-    # (sources/tables.py load_table signature) makes EVERY query
-    # code-stale by the guard's bytecode-closure standard, these
-    # included -- run the guard with SPARK_GRAFT_FULL_VALIDATION=1 for
-    # r12, under which the driver re-validates the full registry and
-    # the window/backlog split is advisory (see stale_green_guard.py).
-    "agg_rfm_segments",  # last green r6
-    "agg_revenue_concentration",  # last green r6
-    "text_char_entropy",  # last green r6
-    "text_source_jsd",  # last green r6
-    "agg_discount_elasticity",  # last green r6
-    "agg_abc_parts",  # last green r6
-    "text_zipf_fit",  # last green r6
-    "profile_correlations",  # last green r6
-    "agg_ship_latency_monthly",  # last green r6
-    "sample_budget_waterfill",  # last green r6
-]
-
 assert len(CORRECTNESS_WINDOW) == 50, len(CORRECTNESS_WINDOW)
 assert len(set(CORRECTNESS_WINDOW)) == 50
 _missing = [n for n in CORRECTNESS_WINDOW if n not in _REGISTRY]
 assert not _missing, f"window names not registered: {_missing}"
-assert not set(PENDING_WINDOW) & set(CORRECTNESS_WINDOW)
-assert len(set(PENDING_WINDOW)) == len(PENDING_WINDOW)
-_missing = [n for n in PENDING_WINDOW if n not in _REGISTRY]
-assert not _missing, f"backlog names not registered: {_missing}"

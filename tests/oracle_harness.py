@@ -75,6 +75,23 @@ def _is_nested_duck_type(t: str) -> bool:
     return t.endswith("[]") or t.startswith(("STRUCT", "MAP", "LIST", "UNION"))
 
 
+def assert_flat_schema(spark_df, name: str) -> None:
+    """Fail if the DataFrame's analyzed schema has an array/map/struct
+    column. Reads df.schema, so a query returning 0 rows is checked too."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    nested = [
+        f.name
+        for f in spark_df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
+    assert not nested, (
+        f"{name} returns nested column(s) {nested} -- the driver's pandas "
+        f"canonicalizer cannot sort these (r2 mm_feature_extract / r4 "
+        f"text_hashed_tfidf failure); register a flat projection"
+    )
+
+
 def compare(spark_df, con, sql: str, name: str = "?") -> list[str]:
     """Return list of mismatch descriptions; empty == pass."""
     errs = []

@@ -5,7 +5,7 @@ local mirror of the driver's t2 gate, run at sf0.001 for speed
 import pytest
 
 from streamprocessing_with_kafka_spark.plans.registry import registry
-from tests.oracle_harness import compare, duckdb_conn
+from tests.oracle_harness import assert_flat_schema, compare, duckdb_conn
 
 QUERIES = {n: q for n, q in registry().items() if q.sql is not None}
 
@@ -20,5 +20,7 @@ def con(sf_dir):
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_oracle_parity(name, spark, sf_dir, con):
     q = QUERIES[name]
-    errs = compare(q.fn(spark, sf_dir), con, q.sql, name)
+    df = q.fn(spark, sf_dir)
+    assert_flat_schema(df, name)
+    errs = compare(df, con, q.sql, name)
     assert not errs, "\n".join(errs)

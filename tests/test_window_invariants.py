@@ -8,23 +8,17 @@ has hit so far can never recur if these hold:
                                  schema (the driver's pandas canonicalizer
                                  cannot sort array/map/struct cells).
 
-Schema flatness is read from the ANALYZED plan (df.schema) -- no job is
-launched for the check itself, though a handful of registered fns do run
-Spark work at DataFrame-construction time (persist+count caches, k-means /
-PQ training iterations), so the parametrized sweep still costs a couple of
-minutes of real execution. PENDING_WINDOW names get the same flatness
-check so a nested shape is caught the round it is written, not the round
-it rotates into the window.
+tests/test_oracle_parity.py applies the same flatness check to every
+oracle-backed query.
 """
 
 import pytest
-from pyspark.sql.types import ArrayType, MapType, StructType
 
 from streamprocessing_with_kafka_spark.plans.registry import (
     CORRECTNESS_WINDOW,
-    PENDING_WINDOW,
     registry,
 )
+from tests.oracle_harness import assert_flat_schema
 
 _REG = registry()
 
@@ -43,16 +37,6 @@ def test_window_entry_has_oracle(name):
     )
 
 
-@pytest.mark.parametrize("name", sorted(set(CORRECTNESS_WINDOW) | set(PENDING_WINDOW)))
+@pytest.mark.parametrize("name", CORRECTNESS_WINDOW)
 def test_window_entry_schema_is_flat(name, spark, sf_dir):
-    df = _REG[name].fn(spark, sf_dir)
-    nested = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    assert not nested, (
-        f"{name} returns nested column(s) {nested} -- the driver's pandas "
-        f"canonicalizer cannot sort these (r2 mm_feature_extract / r4 "
-        f"text_hashed_tfidf failure); register a flat projection"
-    )
+    assert_flat_schema(_REG[name].fn(spark, sf_dir), name)
