@@ -27,9 +27,9 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every registered query. The driver runs them one at a time, so
     building a query means the previous query's DataFrame has been
-    materialized or discarded: each call first frees the one-shot
-    checkpoints the previous query registered, which nothing else frees
-    in the driver's session (functions/lineage.py)."""
+    materialized or discarded: each call first frees the checkpoints
+    the previous query registered, which nothing else frees in the
+    driver's session (functions/lineage.py)."""
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -96,7 +96,7 @@ def main() -> None:
             t0 = time.time()
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
-            # reclaim the run's one-shot checkpoint blocks OUTSIDE the
+            # reclaim the run's checkpoint blocks OUTSIDE the
             # timed region (r12 ADVICE item 4) -- every run above still
             # recomputed from parquet; this only frees dead storage.
             drain_ephemeral_checkpoints()

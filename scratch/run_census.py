@@ -61,7 +61,7 @@ for name, q in sorted(registry().items()):
     except Exception as e:  # record, keep sweeping
         times[name] = -1.0
         print(f"ERROR {name}: {e}", file=sys.stderr)
-    drain_ephemeral_checkpoints()  # free the query's one-shot blocks
+    drain_ephemeral_checkpoints()  # free the query's checkpoint blocks
 
 with open(out_path, "w") as f:
     json.dump(times, f, indent=1, sort_keys=False)

@@ -1,17 +1,41 @@
-"""Lineage helpers for iterative operators built on localCheckpoint.
+"""The one checkpoint lifecycle of the batch query path.
 
-`localCheckpoint` truncates lineage (without it an unrolled iteration's
-plan replays every earlier round -- see dedup.dedup_cluster_keepers'
-5000-exchange anecdote), but the checkpointed RDD blocks stay pinned in
-executor storage until the driver's GC-driven ContextCleaner notices.
-Iterative operators should free superseded rounds EAGERLY so repeated
-invocations in one session (bench loops, test sessions) don't
-accumulate dead blocks.
+Operators checkpoint a frame that feeds several consumers (Spark does
+not reuse exchanges across them) or that cuts an unrolled iteration's
+lineage (without it round r's plan replays rounds 1..r-1 -- see
+dedup.dedup_cluster_keepers). This module is the only caller of
+`DataFrame.localCheckpoint` on that path (tests/test_honest_recompute.py
+enforces it), and every checkpoint has the same lifecycle:
+
+1. register: `local_checkpoint` checkpoints eagerly and records it;
+2. free early (optional): an iterative operator frees a superseded
+   round with `free_local_checkpoint` once the next one is materialized;
+3. drain: `drain_ephemeral_checkpoints()` frees everything registered.
+   `__spark_entry__.queries()` drains before building each query and
+   the harnesses drain after each query's action, so no storage
+   carries from one query into the next.
+
+A checkpoint that must outlive the query boundary stays out of the
+registry: a frozen model that a stream reads (streaming/*) takes its own
+`localCheckpoint`, because a drain between model build and stream start
+would free blocks the stream still reads.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+#: Checkpoints registered since the last drain. Only the harness knows
+#: when the query's result has been materialized, so only it frees them.
+_EPHEMERAL: list[DataFrame] = []
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint of `df`, registered for the query-boundary
+    drain."""
+    out = df.localCheckpoint()
+    _EPHEMERAL.append(out)
+    return out
 
 
 def free_local_checkpoint(df: DataFrame) -> None:
@@ -23,38 +47,13 @@ def free_local_checkpoint(df: DataFrame) -> None:
         pass  # best effort -- ContextCleaner reclaims on GC anyway
 
 
-#: One-shot checkpointed frames awaiting harness-side reclamation (r12
-#: ADVICE item 4): the operators that materialize a shared frame per
-#: invocation (shingles, slot weights, simhash signatures) return lazy
-#: DataFrames that still reference the checkpointed RDD, so the operator
-#: itself can never free it -- only the harness knows when the returned
-#: frame has been materialized. Without draining, a long single session
-#: (the 208-query driver pass, a bench min-of-3 loop) accumulates
-#: superseded checkpoint blocks in executor storage until the driver's
-#: GC-driven ContextCleaner notices the Py4J ref drop.
-_EPHEMERAL: list[DataFrame] = []
-
-
-def ephemeral_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint for a ONE-SHOT shared frame, registered for
-    later `drain_ephemeral_checkpoints()` reclamation. Iterative
-    operators that free superseded rounds themselves keep calling
-    `localCheckpoint()` + `free_local_checkpoint` directly."""
-    out = df.localCheckpoint()
-    _EPHEMERAL.append(out)
-    return out
-
-
 def drain_ephemeral_checkpoints() -> int:
-    """Free every registered one-shot checkpoint; returns the count.
+    """Free every registered checkpoint; returns the count.
 
     Call ONLY between queries, after every DataFrame returned by the
     previous query has been materialized or discarded -- unpersisting a
     local (non-reliable) checkpoint that a still-pending plan references
-    would make that plan uncomputable. Harnesses (bench.py, the census,
-    the driver simulation) call this after each query's action, and
-    `__spark_entry__.queries()` calls it before building each query, so
-    the external driver frees the previous query's checkpoints too."""
+    would make that plan uncomputable."""
     n = 0
     while _EPHEMERAL:
         free_local_checkpoint(_EPHEMERAL.pop())

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import (
     DEC,
     dec_avg,
@@ -1028,10 +1029,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint: cust feeds BOTH the edges aggregate and the scoring
     # pass -- without it each consumer re-derives it from a fresh
     # orders scan
-    cust = (
+    cust = local_checkpoint(
         cust.crossJoin(F.broadcast(maxd))
         .withColumn("recency", F.col("max_day") - F.col("last_day"))
-        .localCheckpoint()
     )
     edges = cust.agg(
         *[
@@ -1148,7 +1148,7 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-partitioned offsets). checkpoint: ranked feeds both sums
     # and the top-slice filter
     w = W.orderBy(F.asc("spend"), F.asc("o_custkey"))
-    ranked = cust.withColumn("i", F.row_number().over(w)).localCheckpoint()
+    ranked = local_checkpoint(cust.withColumn("i", F.row_number().over(w)))
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("spend").cast(DEC)).alias("total"),
@@ -1523,9 +1523,11 @@ def abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decomposition on a value-ordered (not id-ordered) domain.
     Ties order by (revenue DESC, partkey ASC) for a total order."""
     li = load_table(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_partkey").agg(
-        dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-    ).localCheckpoint()  # cuts/bucketed/total all consume this frame
+    rev = local_checkpoint(  # cuts/bucketed/total all consume this frame
+        li.groupBy("l_partkey").agg(
+            dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
+        )
+    )
     cuts = rev.agg(
         F.expr(
             "percentile(revenue, array({}))".format(
@@ -1659,11 +1661,11 @@ def _fulfillment_study(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("first_ship")
         )
     )
-    joined = orders.join(first_ship, "o_orderkey", "left").localCheckpoint()
+    joined = local_checkpoint(orders.join(first_ship, "o_orderkey", "left"))
     cutoff = joined.agg(
         F.date_sub(F.max("first_ship"), KM_CENSOR_DAYS).alias("cutoff")
     )
-    return (
+    return local_checkpoint(
         joined.crossJoin(F.broadcast(cutoff))
         .filter(F.col("o_orderdate").cast("date") <= F.col("cutoff"))
         .select(
@@ -1692,7 +1694,6 @@ def _fulfillment_study(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(False),
             ).alias("g1"),
         )
-        .localCheckpoint()
     )
 
 

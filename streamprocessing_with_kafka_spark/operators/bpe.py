@@ -32,6 +32,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import (
+    free_local_checkpoint,
+    local_checkpoint,
+)
 from streamprocessing_with_kafka_spark.functions.numeric import round_sql
 from streamprocessing_with_kafka_spark.operators.text import _tokens
 from streamprocessing_with_kafka_spark.sources.tables import load_table
@@ -71,17 +75,13 @@ def _train(spark: SparkSession, sf_dir: str):
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = vocab.select(
-        "word",
-        "freq",
-        F.concat(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.col("word").substr(i, F.lit(1)),
-            ),
-            F.array(F.lit(EOW)),
-        ).alias("syms"),
-    ).localCheckpoint()
+    chars = F.transform(
+        F.sequence(F.lit(1), F.length("word")),
+        lambda i: F.col("word").substr(i, F.lit(1)),
+    )
+    cur = local_checkpoint(
+        vocab.select("word", "freq", F.concat(chars, F.array(F.lit(EOW))).alias("syms"))
+    )
 
     merge_rows = []
     for rnd in range(1, BPE_ROUNDS + 1):
@@ -102,7 +102,7 @@ def _train(spark: SparkSession, sf_dir: str):
         ).groupBy("p.a", "p.b").agg(F.sum("freq").alias("cnt"))
         # argmax by count, lexicographic (a, b) tie-break: min of the
         # (-cnt, a, b) struct -- one deterministic aggregate, no sort
-        best = (
+        best = local_checkpoint(
             pairs.agg(
                 F.min(
                     F.struct(
@@ -111,13 +111,11 @@ def _train(spark: SparkSession, sf_dir: str):
                         F.col("b"),
                     )
                 ).alias("m")
-            )
-            .select(
+            ).select(
                 F.col("m.a").alias("best_a"),
                 F.col("m.b").alias("best_b"),
                 (-F.col("m.neg")).alias("cnt"),
             )
-            .localCheckpoint()
         )
         # on an empty corpus (or a fully-merged vocabulary) `pairs` is
         # empty and the global-min aggregate emits one all-NULL row;
@@ -134,11 +132,12 @@ def _train(spark: SparkSession, sf_dir: str):
             )
         )
         fold = _merge_fold(F.col("best_a"), F.col("best_b"))
-        cur = (
-            cur.crossJoin(F.broadcast(best))
-            .select("word", "freq", fold(F.col("syms")).alias("syms"))
-            .localCheckpoint()
+        prev, cur = cur, local_checkpoint(
+            cur.crossJoin(F.broadcast(best)).select(
+                "word", "freq", fold(F.col("syms")).alias("syms")
+            )
         )
+        free_local_checkpoint(prev)  # superseded round's blocks
     return cur, merge_rows
 
 

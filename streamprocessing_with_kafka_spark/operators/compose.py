@@ -128,9 +128,7 @@ def export_packed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shingle explode + one signature aggregate instead of two of
     each) and passes them through the constituents' frame parameters --
     bit-identical expressions, declared outputs unchanged (r13)."""
-    from streamprocessing_with_kafka_spark.functions.lineage import (
-        ephemeral_local_checkpoint,
-    )
+    from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
     from streamprocessing_with_kafka_spark.operators.decontaminate import (
         decontaminate_fuzzy_from_shingles,
     )
@@ -161,7 +159,7 @@ def export_packed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "avg_logratio")
     )
     sh = _shingles_with_count(spark, sf_dir)
-    bands = ephemeral_local_checkpoint(_band_keys(_signature_agg(sh)))
+    bands = local_checkpoint(_band_keys(_signature_agg(sh)))
     contaminated = (
         decontaminate_fuzzy_from_shingles(sh, bands=bands)
         .select("doc_id")
@@ -381,9 +379,7 @@ def orders_ops_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     their frame parameters (bit-identical expressions, so the declared
     outputs are unchanged; r13).  The oracle composes the SAME SQL
     constants as CTEs."""
-    from streamprocessing_with_kafka_spark.functions.lineage import (
-        ephemeral_local_checkpoint,
-    )
+    from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
     from streamprocessing_with_kafka_spark.operators.analytics import (
         ship_latency_monthly,
     )
@@ -394,7 +390,7 @@ def orders_ops_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_with_kafka_spark.sources.tables import load_table
 
     p = spark.sparkContext.defaultParallelism
-    per_order = ephemeral_local_checkpoint(
+    per_order = local_checkpoint(
         load_table(spark, sf_dir, "lineitem", rebalance=False)
         .groupBy("l_orderkey")
         .agg(

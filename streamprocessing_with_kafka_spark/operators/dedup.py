@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from streamprocessing_with_kafka_spark.functions.lineage import (
-    ephemeral_local_checkpoint,
     free_local_checkpoint,
+    local_checkpoint,
 )
 from streamprocessing_with_kafka_spark.functions.numeric import round_sql
 from streamprocessing_with_kafka_spark.functions.hashing import (
@@ -194,7 +194,7 @@ def _shingles_with_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses the first run's bytes instead of recomputing from parquet.
     That misstates what a fresh run of the query costs. localCheckpoint
     is keyed to the RDD of this call; every invocation recomputes, and
-    the superseded blocks are GC-reclaimed by the ContextCleaner."""
+    the blocks are freed at the query boundary (functions/lineage.py)."""
     from pyspark.sql import Window as W
 
     sh = (
@@ -204,7 +204,7 @@ def _shingles_with_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Even a single consumer pays for the barrier: the fused pair search
     # ran 1.61 s with it vs 1.83 s lazy (A/B at sf0.1).
-    return ephemeral_local_checkpoint(sh)
+    return local_checkpoint(sh)
 
 
 def _group_pair_explode(
@@ -249,9 +249,11 @@ def _pair_intersections_fused(sh: DataFrame, max_shingle_df: int) -> DataFrame:
     stages; A/B at sf0.1: 1.26 -> 1.07 s), and the bound on group size
     also bounds the collected array, so the ObjectHashAggregate that
     makes this path a loss for the UNCAPPED search (below) stays cheap.
-    Each doc contributes a hash at most once, so members sort strictly
-    by doc_id and a < b is exactly the self-join's doc_id ordering; the
-    per-doc sizes ride the collected struct."""
+    Members sort by doc_id, but a doc_id that labels several rows
+    contributes a hash once per row, and a NULL doc_id sorts first: the
+    explicit doc_a < doc_b filter keeps the self-join's ordering, which
+    has neither self-pairs nor NULL keys. The per-doc sizes ride the
+    collected struct."""
     pe = _group_pair_explode(
         sh, ["_h"], F.struct("doc_id", "n"), max_group=max_shingle_df
     )
@@ -262,6 +264,7 @@ def _pair_intersections_fused(sh: DataFrame, max_shingle_df: int) -> DataFrame:
             F.col("a.n").alias("na"),
             F.col("b.n").alias("nb"),
         )
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("inter"),
@@ -681,7 +684,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r13) the signature frame has exactly ONE consumer branch, so the
     # eager localCheckpoint the r12 self-join needed (two concurrent
     # branches would each recompute the signatures) is pure overhead.
-    sig = simhash_signatures(spark, sf_dir)
+    # a NULL doc_id has no identity to pair: the oracle's
+    # a.doc_id < b.doc_id drops it, so it must not enter the groups
+    sig = simhash_signatures(spark, sf_dir).filter(F.col("doc_id").isNotNull())
     bits_per = (SIMHASH_BITS + SIMHASH_BLOCKS - 1) // SIMHASH_BLOCKS  # 9
     blocks = sig.select(
         "doc_id",
@@ -774,24 +779,22 @@ def dedup_cluster_keepers(
     the bottleneck. (Cluster analog: reliable checkpoint() to survive
     executor loss; local storage suffices in one JVM.) Superseded
     rounds' checkpoint blocks are freed EAGERLY via the LogicalRDD
-    handle -- waiting for the driver's GC-driven ContextCleaner would
-    let up to 30 rounds of dead label RDDs pile up in executor
-    storage.
+    handle -- waiting for the query-boundary drain would let up to 30
+    rounds of dead label RDDs pile up in executor storage.
     """
-    _free_checkpoint = free_local_checkpoint
-
     pairs = minhash_lsh_pairs(spark, sf_dir, threshold, sh=sh, bands=bands).select(
         "doc_a", "doc_b"
     )
     # undirected edge list, both directions
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = (
+    edges = local_checkpoint(
+        pairs.union(
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        )
+    )
+    labels = local_checkpoint(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
     )
     prev = labels
     for _ in range(30):
@@ -810,7 +813,7 @@ def dedup_cluster_keepers(
         lab2 = labels.select(
             F.col("doc_id").alias("_l"), F.col("label").alias("_ll")
         )
-        updated = (
+        updated = local_checkpoint(
             labels.join(neighbor_min, "doc_id", "left")
             .join(lab2, F.col("label") == F.col("_l"))
             .select(
@@ -822,8 +825,8 @@ def dedup_cluster_keepers(
                 ).alias("new_label"),
                 "label",
             )
-        ).localCheckpoint()  # eager: materializes the round, truncates lineage
-        _free_checkpoint(prev)
+        )
+        free_local_checkpoint(prev)
         prev = updated
         changed = updated.filter(F.col("new_label") != F.col("label")).count()
         labels = updated.select("doc_id", F.col("new_label").alias("label"))
@@ -833,7 +836,7 @@ def dedup_cluster_keepers(
         raise RuntimeError(
             "connected components did not converge in 30 doubling rounds"
         )
-    _free_checkpoint(edges)
+    free_local_checkpoint(edges)
     return labels.select("doc_id", F.col("label").alias("keeper_doc_id"))
 
 

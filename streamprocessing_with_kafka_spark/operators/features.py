@@ -30,9 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from streamprocessing_with_kafka_spark.functions.hashing import md5_long, md5_long_sql
-from streamprocessing_with_kafka_spark.functions.lineage import (
-    ephemeral_local_checkpoint,
-)
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import (
     dec_sum_sql,
     round_sql as _round_sql,
@@ -132,7 +130,7 @@ def _slot_weights_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf2 = (F.col("wf").cast("double") * F.col("wf").cast("double")).cast(
         "decimal(28,10)"
     )
-    return ephemeral_local_checkpoint(
+    return local_checkpoint(
         slot_weights(spark, sf_dir)
         .filter(F.col("wf") != 0)
         .withColumn("n2", F.sum(wf2).over(W.partitionBy("doc_id")).cast("double"))

@@ -34,7 +34,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from streamprocessing_with_kafka_spark.functions.lineage import free_local_checkpoint
+from streamprocessing_with_kafka_spark.functions.lineage import (
+    free_local_checkpoint,
+    local_checkpoint,
+)
 from streamprocessing_with_kafka_spark.functions.numeric import dec_sum, round_sql
 from streamprocessing_with_kafka_spark.sources.tables import load_table, table_row_count
 
@@ -58,9 +61,7 @@ def cooccurrence_edges(ev: DataFrame) -> DataFrame:
     )
 
 
-def triangle_clustering(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def triangle_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user triangle count, degree, and local clustering coefficient.
 
     Triangles enumerate once each by EDGE-INTERSECTION over the DEGREE-
@@ -82,20 +83,17 @@ def triangle_clustering(
     # the edge list feeds FIVE consumers (degree + orientation + three
     # triangle-join roles); without truncation each re-runs the occ
     # self-join and distincts (a 17-shuffle plan). Vocabulary-sized:
-    # cheap to materialize. checkpoint=False keeps lineage for plan pins.
-    if checkpoint:
-        e = e.localCheckpoint()
-    degree = (
+    # cheap to materialize.
+    e = local_checkpoint(e)
+    degree = local_checkpoint(
         e.select(F.explode(F.array("u", "v")).alias("user_id"))
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    if checkpoint:
-        degree = degree.localCheckpoint()
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    d = (
+    d = local_checkpoint(
         e.join(degree.select(F.col("user_id").alias("u"), F.col("degree").alias("du")), "u")
         .join(degree.select(F.col("user_id").alias("v"), F.col("degree").alias("dv")), "v")
         .select(
@@ -103,8 +101,6 @@ def triangle_clustering(
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
     )
-    if checkpoint:
-        d = d.localCheckpoint()
     # Edge-intersection enumeration (compact-forward): build each
     # vertex's out-neighbor array once, then for every oriented edge
     # (s, t) the triangles it CLOSES are exactly N+(s) & N+(t) -- for a
@@ -273,9 +269,11 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_graph.py); uniform-degree graphs stay uniform."""
     ev = load_table(spark, sf_dir, "events")
     e = cooccurrence_edges(ev)
-    directed = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint()
+    directed = local_checkpoint(
+        e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
+    )
     deg = directed.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     n_row = deg.agg(F.count(F.lit(1)).alias("n"))
     ranks = deg.join(F.broadcast(n_row)).select(
@@ -288,7 +286,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no data action; an unreadable footer counts as large.
     combine = table_row_count(sf_dir, "events") >= GRAPH_SMALL_EVENT_ROWS
     for _ in range(PAGERANK_ITERS):
-        ranks = _pagerank_round(directed, deg, n_row, ranks, p, combine).localCheckpoint()
+        ranks = local_checkpoint(_pagerank_round(directed, deg, n_row, ranks, p, combine))
         if prev is not None:
             free_local_checkpoint(prev)  # superseded round's blocks
         prev = ranks

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.sources.tables import load_table
 
 
@@ -276,10 +277,8 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered, never a full sort of all keys); scalars attach via the
     1-row broadcast idiom."""
     orders = load_table(spark, sf_dir, "orders")
-    counts = (
-        orders.groupBy(F.col("o_custkey").alias("key"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+    counts = local_checkpoint(
+        orders.groupBy(F.col("o_custkey").alias("key")).agg(F.count(F.lit(1)).alias("cnt"))
     )
     totals = counts.agg(
         F.sum("cnt").alias("n_rows"),
@@ -289,11 +288,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join, Catalyst can strip the sort and degrade limit(K) to an
     # arbitrary-K LocalLimit; the eager checkpoint pins the
     # TakeOrderedAndProject execution
-    top = (
-        counts.orderBy(F.desc("cnt"), F.asc("key"))
-        .limit(SKEW_TOP_K)
-        .localCheckpoint()
-    )
+    top = local_checkpoint(counts.orderBy(F.desc("cnt"), F.asc("key")).limit(SKEW_TOP_K))
     mean_per_key = F.col("n_rows").cast("double") / F.col("n_keys").cast("double")
     return top.crossJoin(F.broadcast(totals)).select(
         "key",

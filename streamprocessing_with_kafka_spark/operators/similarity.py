@@ -23,7 +23,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from streamprocessing_with_kafka_spark.functions.hashing import md5_long
-from streamprocessing_with_kafka_spark.functions.lineage import free_local_checkpoint
+from streamprocessing_with_kafka_spark.functions.lineage import (
+    free_local_checkpoint,
+    local_checkpoint,
+)
 from streamprocessing_with_kafka_spark.functions.numeric import dec_sum, round_sql
 from streamprocessing_with_kafka_spark.sources.tables import load_table
 
@@ -1063,7 +1066,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv_new"),
             F.first("n_rows").alias("n_new"),
         )
-        cent = (
+        cent = local_checkpoint(
             cent.alias("p")
             .join(upd, "cell", "left")
             .select(
@@ -1071,7 +1074,6 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("cv_new", F.col("p.cv")).alias("cv"),
                 F.coalesce("n_new", F.lit(0)).alias("n_members"),
             )
-            .localCheckpoint()
         )
         if prev is not None:
             free_local_checkpoint(prev)  # superseded round's blocks
@@ -1368,7 +1370,7 @@ def pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv_new"),
             F.first("n_rows").alias("n_new"),
         )
-        cb = (
+        cb = local_checkpoint(
             cb.alias("p")
             .join(upd, ["m", "code"], "left")
             .select(
@@ -1377,7 +1379,6 @@ def pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("cv_new", F.col("p.cv")).alias("cv"),
                 F.coalesce("n_new", F.lit(0)).alias("n_members"),
             )
-            .localCheckpoint()
         )
         if prev is not None:
             free_local_checkpoint(prev)  # superseded round's blocks
@@ -1690,7 +1691,9 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("o")
     )
-    cov_ut = (
+    # checkpoint the TRIANGLE, before the mirror: the union's second
+    # branch would otherwise re-run the corpus aggregate
+    cov_ut = local_checkpoint(
         outer.select(F.col("o.i").alias("i"), F.col("o.j").alias("j"), F.col("o.p").alias("p"))
         .groupBy("i", "j")
         .agg(dec_sum("p").alias("s"))
@@ -1702,9 +1705,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # NULL, ANSI `/` would abort the whole diagnostic
             F.round(F.try_divide(F.col("s"), (F.col("n") - 1).cast("double")), 6).alias("c"),
         )
-        # checkpoint the TRIANGLE, before the mirror: the union's second
-        # branch would otherwise re-run the corpus aggregate
-        .localCheckpoint()
     )
     cov = cov_ut.union(
         cov_ut.filter(F.col("i") < F.col("j")).select(
@@ -1722,10 +1722,9 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.round(dec_sum(F.col("c") * F.col("x")), 6).alias("w"))
         )
         norm = w.agg(F.sqrt(dec_sum(F.col("w") * F.col("w"))).alias("nrm"))
-        vec = (
+        vec = local_checkpoint(
             w.crossJoin(F.broadcast(norm))
             .select(F.col("i").alias("j"), F.round(F.try_divide(F.col("w"), F.col("nrm")), 6).alias("x"))
-            .localCheckpoint()
         )
         if prev is not None:
             free_local_checkpoint(prev)  # superseded round; cov stays live

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import round_sql as _round_sql
 from streamprocessing_with_kafka_spark.sources.tables import load_table
 
@@ -1030,9 +1031,7 @@ ORDER BY shard
 """
 
 
-def source_divergence(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram ENTROPY and KL divergence from the corpus
     distribution -- the mixture-monitoring row for curation ("is src7
     drifting into boilerplate? is its vocabulary collapsing?").
@@ -1055,8 +1054,7 @@ def source_divergence(
     # st feeds FOUR consumers (term/source/corpus totals + the scoring
     # join); truncation runs the corpus explode+count once instead of
     # four times (9-shuffle plan otherwise). Vocab x sources rows.
-    if checkpoint:
-        st = st.localCheckpoint()
+    st = local_checkpoint(st)
     term_tot = st.groupBy("term").agg(F.sum("c_st").alias("c_t"))
     src_tot = st.groupBy("source").agg(F.sum("c_st").alias("t_s"))
     corpus_tot = term_tot.agg(F.sum("c_t").alias("t"))
@@ -1225,9 +1223,7 @@ LIMIT {COLLOC_TOP_K}
 VOCAB_BUCKET = 64  # docs per prefix-sum range; |docs|/64 offset rows
 
 
-def vocab_growth(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary growth curve + Heaps'-law fit: after each document
     (in doc_id order), the cumulative token count N and cumulative
     distinct vocabulary V, plus the corpus' fitted Heaps exponent
@@ -1284,9 +1280,7 @@ def vocab_growth(
     # base feeds BOTH the offsets aggregate and the per-range join;
     # without truncation each consumer re-runs the word-attribution
     # shuffles (13-shuffle plan). |docs| rows: cheap to materialize.
-    # checkpoint=False exposes the full lineage to the plan-shape pin.
-    if checkpoint:
-        base = base.localCheckpoint()
+    base = local_checkpoint(base)
     wb = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, -1)
     offsets = (
         base.groupBy("bucket")
@@ -1305,8 +1299,7 @@ def vocab_growth(
         (F.col("tok_off") + F.sum("n_tokens").over(wd)).alias("cum_tokens"),
         (F.col("new_off") + F.sum("n_new").over(wd)).alias("cum_vocab"),
     )
-    if checkpoint:
-        cp = cp.localCheckpoint()  # feeds the OLS fit AND the final projection
+    cp = local_checkpoint(cp)  # feeds the OLS fit AND the final projection
     x = F.log(F.col("cum_tokens").cast("double"))
     y = F.log(F.col("cum_vocab").cast("double"))
     fit = cp.agg(
@@ -1483,9 +1476,7 @@ FROM fit
 
 # --------------------------------- pairwise source JSD distance matrix
 
-def source_jsd(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jensen-Shannon divergence between every two sources'
     unigram distributions -- the symmetric, bounded (<= ln 2) DISTANCE
     MATRIX companion of `source_divergence` (which scores each source
@@ -1507,9 +1498,8 @@ def source_jsd(
         .agg(F.count(F.lit(1)).alias("c"))
     )
     # st feeds totals, the term list, AND the grid join; truncation
-    # runs the corpus explode+count once (checkpoint=False for pins)
-    if checkpoint:
-        st = st.localCheckpoint()
+    # runs the corpus explode+count once
+    st = local_checkpoint(st)
     tot = st.groupBy("source").agg(F.sum("c").alias("t_s"))
     terms = st.select("term").distinct()
     sources = tot

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import DEC, dec_sum_sql, round_sql
 from streamprocessing_with_kafka_spark.sources.tables import load_table
 
@@ -600,10 +601,9 @@ def type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(pair_structs, singleton_structs, total_struct)
         ).alias("p")
     )
-    counts = (
+    counts = local_checkpoint(
         marks.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     both = counts.filter(F.col("a").isNotNull() & F.col("b").isNotNull()).select(
         F.col("a").alias("type_a"), F.col("b").alias("type_b"), F.col("c").alias("users_both")
@@ -920,10 +920,9 @@ def chi2_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint the bounded contingency frame: it feeds the spine
     # (twice), the cell join, and the totals -- without it each reuse
     # re-derives the frame from a fresh corpus scan
-    observed = (
+    observed = local_checkpoint(
         ev.groupBy("event_type", F.hour("ts").alias("hr"))
         .agg(F.count(F.lit(1)).alias("obs"))
-        .localCheckpoint()
     )
     # densify: zero cells contribute their full expected count to the
     # statistic (term = exp when obs = 0), so the spine of ALL
@@ -1532,9 +1531,9 @@ def markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ev.select(
         F.lag("event_type").over(w).alias("prev_type"), "event_type"
     ).filter(F.col("prev_type").isNotNull())
-    counts = pairs.groupBy("prev_type", "event_type").agg(
-        F.count(F.lit(1)).alias("c")
-    ).localCheckpoint()  # <= 25 rows; row/marginal branches both consume
+    counts = local_checkpoint(  # <= 25 rows; row/marginal branches both consume
+        pairs.groupBy("prev_type", "event_type").agg(F.count(F.lit(1)).alias("c"))
+    )
     row = counts.groupBy("prev_type").agg(
         F.sum("c").alias("c_row"),
         F.sum(

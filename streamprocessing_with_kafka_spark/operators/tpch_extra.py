@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from streamprocessing_with_kafka_spark.functions.lineage import local_checkpoint
 from streamprocessing_with_kafka_spark.functions.numeric import DEC, dec_sum, dec_sum_sql
 from streamprocessing_with_kafka_spark.sources.tables import load_table
 
@@ -278,10 +279,8 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(dec_sum(_rev()).alias("total_revenue"))
-        .localCheckpoint(eager=True)
+    rev = local_checkpoint(
+        li.groupBy("l_suppkey").agg(dec_sum(_rev()).alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
@@ -438,16 +437,14 @@ def important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare is integer-scaled decimal (val * 10000 > total): exact in
     both engines, no double rounding anywhere until the output cast."""
     li = load_table(spark, sf_dir, "lineitem")
-    per_part = (
-        li.groupBy("l_partkey")
-        .agg(F.sum(_rev().cast(DEC)).alias("val_dec"))
-        # single-JVM pin so the scalar-total branch and the filter branch
-        # share one materialization (Spark does not reuse exchanges across
-        # consumers). CLUSTER NOTE: localCheckpoint is NOT fault-tolerant
-        # (executor loss = unrecoverable partitions); a production run
-        # swaps this for persist() (recomputable lineage) or reliable
-        # checkpoint() -- same plan shape either way
-        .localCheckpoint(eager=True)
+    # single-JVM pin so the scalar-total branch and the filter branch
+    # share one materialization (Spark does not reuse exchanges across
+    # consumers). CLUSTER NOTE: localCheckpoint is NOT fault-tolerant
+    # (executor loss = unrecoverable partitions); a production run
+    # swaps this for persist() (recomputable lineage) or reliable
+    # checkpoint() -- same plan shape either way
+    per_part = local_checkpoint(
+        li.groupBy("l_partkey").agg(F.sum(_rev().cast(DEC)).alias("val_dec"))
     )
     total = per_part.agg(F.sum("val_dec").alias("total_dec"))
     return (

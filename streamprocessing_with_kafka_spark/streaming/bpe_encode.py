@@ -26,9 +26,10 @@ from streamprocessing_with_kafka_spark.operators.text import _tokens
 
 
 def frozen_word_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train on the corpus at sf_dir and freeze word -> n_syms."""
+    """Train on the corpus at sf_dir and freeze word -> n_syms, with its
+    own stream-lifetime checkpoint (functions/lineage.py)."""
     trained, _ = _train(spark, sf_dir)
-    return trained.select("word", F.size("syms").alias("n_syms"))
+    return trained.select("word", F.size("syms").alias("n_syms")).localCheckpoint()
 
 
 def encode_batch_stream(docs: DataFrame, word_len: DataFrame) -> DataFrame:

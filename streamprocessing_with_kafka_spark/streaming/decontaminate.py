@@ -148,7 +148,8 @@ def fuzzy_eval_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Built with the batch operator's own shingling/signature/banding code
     so stream and batch agree definitionally; the eval corpus is a
-    sliver, so both maps broadcast."""
+    sliver, so both maps broadcast. The row takes its own stream-
+    lifetime checkpoint (functions/lineage.py)."""
     sh = _shingles_with_count(spark, sf_dir)
     ev_sh = sh.filter(F.col("doc_id") % EVAL_MOD == 0)
     bands = _band_keys(_signature_agg(ev_sh))
@@ -179,7 +180,7 @@ def fuzzy_eval_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("set_map")
         )
     )
-    return band_map.crossJoin(F.broadcast(set_map))
+    return band_map.crossJoin(F.broadcast(set_map)).localCheckpoint()
 
 
 def streaming_fuzzy_gate(docs: DataFrame, model: DataFrame) -> DataFrame:

@@ -33,8 +33,9 @@ from streamprocessing_with_kafka_spark.operators.similarity import (
 def pq_codebook_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frozen trained codebook as ONE static row -- shared with the
     batch operator, so batch and stream encode from definitionally
-    identical models."""
-    return _pq_codebook_row(pq_trained_codebook(spark, sf_dir))
+    identical models; it takes its own stream-lifetime checkpoint
+    (functions/lineage.py)."""
+    return _pq_codebook_row(pq_trained_codebook(spark, sf_dir)).localCheckpoint()
 
 
 def streaming_pq_encode(vecs: DataFrame, model: DataFrame) -> DataFrame:

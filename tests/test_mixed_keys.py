@@ -217,3 +217,24 @@ def test_basket_pairs_have_no_phantom_basket(spark, tmp_path):
     ).write.parquet(d + "/lineitem.parquet")
     got = basket_part_pairs(spark, d).collect()
     assert [(r.pa, r.pb, r.c_ab) for r in got] == [(100, 200, BASKET_MIN_SUPPORT)]
+
+
+def test_doc_pair_searches_follow_the_oracle_pair_order(spark, tmp_path):
+    """Document pairs follow the oracle's `a.doc_id < b.doc_id`: a NULL
+    doc_id pairs with nothing, and a doc_id that labels several rows
+    never pairs with itself. The SimHash group-pair explode emitted the
+    NULL pairs and the capped Jaccard pair search a (0, 0) self-pair
+    (the mixed_keys and constant sweep reds)."""
+    from streamprocessing_with_kafka_spark.operators.dedup import (
+        ngram_jaccard_pairs_capped,
+        simhash_pairs,
+    )
+
+    text = "alpha beta gamma delta epsilon"
+    d = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(0, text), (0, text), (None, text), (1, text)], "doc_id long, text string"
+    ).write.parquet(d + "/documents.parquet")
+    for fn in (simhash_pairs, ngram_jaccard_pairs_capped):
+        got = {(r.doc_a, r.doc_b) for r in fn(spark, d).collect()}
+        assert got == {(0, 1)}, (fn.__name__, got)

@@ -639,18 +639,17 @@ def test_histogram_bounds_join_is_broadcast(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_triangle_joins_are_all_equi(spark, sf_dir):
+def test_triangle_joins_are_all_equi(spark, sf_dir, monkeypatch):
     """Triangle enumeration must stay ordered-edge equi-joins: a nested-
     loop or cartesian here is the O(N^2)/O(N^3) cliff the design exists
     to avoid."""
     from streamprocessing_with_kafka_spark.operators import graph
 
-    # checkpoint=False: the registered query truncates the edge-list
-    # lineage (shared-frame materialization), which would hide the
-    # cooccurrence self-join from this audit
-    plan = _plan(
-        spark, graph.triangle_clustering(spark, sf_dir, checkpoint=False)
-    )
+    # the registered query truncates the edge-list lineage (shared-frame
+    # materialization), which would hide the cooccurrence self-join from
+    # this audit: swap the checkpoint for identity
+    monkeypatch.setattr(graph, "local_checkpoint", lambda df: df)
+    plan = _plan(spark, graph.triangle_clustering(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -815,7 +814,7 @@ def test_collocations_min_count_precedes_unigram_joins(spark, sf_dir):
     assert join_positions and m.start() > max(join_positions), plan
 
 
-def test_vocab_growth_has_no_global_window(spark, sf_dir):
+def test_vocab_growth_has_no_global_window(spark, sf_dir, monkeypatch):
     """Every window in the two-phase prefix sum must be partitioned
     (bucket ranges) -- a single-partition global window would serialize
     the corpus through one task.  The tiny offsets frame is the ONE
@@ -823,10 +822,11 @@ def test_vocab_growth_has_no_global_window(spark, sf_dir):
     and must be the only one."""
     from streamprocessing_with_kafka_spark.operators import text as t
 
-    # checkpoint=False: the registered query truncates lineage with
-    # localCheckpoint (shared-frame reuse), hiding the windows from
-    # explain -- audit the full un-checkpointed composition instead
-    plan = _plan(spark, t.vocab_growth(spark, sf_dir, checkpoint=False))
+    # the registered query truncates lineage with localCheckpoint
+    # (shared-frame reuse), hiding the windows from explain -- audit the
+    # full un-checkpointed composition instead
+    monkeypatch.setattr(t, "local_checkpoint", lambda df: df)
+    plan = _plan(spark, t.vocab_growth(spark, sf_dir))
     # per-doc cumsum windows (over n_tokens/n_new) carry a bucket
     # partition spec: `..., [bucket#N], [doc_id ASC]`
     per_doc = re.findall(r"Window \[sum\(n_tokens#[^\n]*", plan)

@@ -24,7 +24,7 @@ def _canon(rows):
 
 
 def test_stream_encode_matches_batch_on_training_corpus(spark, sf_dir, tmp_path):
-    word_len = frozen_word_lengths(spark, sf_dir).localCheckpoint()
+    word_len = frozen_word_lengths(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     inp, ckpt, out = tmp_path / "docs", tmp_path / "ckpt", tmp_path / "enc"
     inp.mkdir()

@@ -99,7 +99,7 @@ def test_streaming_fuzzy_gate_converges_to_batch(spark, sf_dir, tmp_path):
         with open(inp / f"b{b}.json", "w") as f:
             for r in rows[b * per : (b + 1) * per]:
                 f.write(_json.dumps(r) + "\n")
-    model = fuzzy_eval_model(spark, sf_dir).localCheckpoint()
+    model = fuzzy_eval_model(spark, sf_dir)
     q = (
         streaming_fuzzy_gate(file_document_stream(spark, str(inp)), model)
         .writeStream.format("memory")
@@ -127,7 +127,7 @@ def test_streaming_fuzzy_gate_is_pure_expression(spark, sf_dir):
         streaming_fuzzy_gate,
     )
 
-    model = fuzzy_eval_model(spark, sf_dir).localCheckpoint()
+    model = fuzzy_eval_model(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     plan = (
         streaming_fuzzy_gate(d, model)

@@ -46,7 +46,7 @@ def test_streaming_pq_encode_converges_to_batch(spark, sf_dir, tmp_path):
         with open(inp / f"b{b}.json", "w") as f:
             for r in rows[b * per : (b + 1) * per]:
                 f.write(json.dumps(r) + "\n")
-    model = pq_codebook_model(spark, sf_dir).localCheckpoint()
+    model = pq_codebook_model(spark, sf_dir)
     stream = spark.readStream.schema(VEC_SCHEMA).json(str(inp))
     q = (
         streaming_pq_encode(stream, model)
@@ -67,7 +67,7 @@ def test_streaming_pq_encode_converges_to_batch(spark, sf_dir, tmp_path):
 
 
 def test_streaming_pq_encode_is_pure_expression(spark, sf_dir):
-    model = pq_codebook_model(spark, sf_dir).localCheckpoint()
+    model = pq_codebook_model(spark, sf_dir)
     vecs = load_table(spark, sf_dir, "embeddings")
     plan = (
         streaming_pq_encode(vecs, model)
@@ -85,7 +85,7 @@ def test_streaming_pq_ingest_gate_drops_corrupt_vectors(spark, sf_dir):
     """The ingest gate is the streaming twin of the batch clean scan
     (r9 policy): corrupt vectors must not land codes in the compressed
     index."""
-    model = pq_codebook_model(spark, sf_dir).localCheckpoint()
+    model = pq_codebook_model(spark, sf_dir)
     vecs = spark.createDataFrame(
         [
             (0, [0.1] * 64, 0),
